@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query wall-clock seconds
-  * at SPARK_GRAFT_SF_DIR.
+  * at SPARK_GRAFT_SF_DIR. The full line is also written to the path given
+  * as the first argument (default `BENCH_full.json` in the working
+  * directory).
   *
   * Each query is executed twice: a warm-up pass (JIT + codegen + parquet
   * footer caches — in a one-query-per-JVM deployment this cost is
@@ -49,7 +51,7 @@ object Bench {
     // per-query JSON so rounds stay diffable without a re-run (committed
     // per round, so git history keeps every round's copy)
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/BENCH_full.json"),
+      java.nio.file.Paths.get(args.headOption.getOrElse("BENCH_full.json")),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Exception =>
       System.err.println(s"[bench] BENCH_full.json not written: $e") }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * version). Writers stage data files and the manifest fully, then
   * commit by rewriting the pointer — readers of version K never observe
   * a partial write because data files and manifests are immutable after
-  * commit. Single-writer semantics, like [[ParquetStore]]'s staged swap.
+  * commit.
   *
   * This is the Delta-log file-reuse design, not copy-on-write snapshots:
   * `upsert` rewrites ONLY the data files that contain a matched key
@@ -307,6 +307,13 @@ class VersionedStore(root: String) {
 
   private val MaxCommitRetries = 50
 
+  /** Vacuum's horizon for files no manifest names yet: Delta's 7-day
+    * VACUUM default. A writer's parquet parts sit in `_stage_*` and then
+    * in `files/` BEFORE its manifest link commits them, so an
+    * unreferenced file may belong to a commit in flight; only age tells
+    * a crashed writer's leftovers from a live one's. */
+  private val OrphanRetentionMs = 7L * 24 * 60 * 60 * 1000
+
   /** Source feeds at or below this observed row count broadcast their
     * keys into the hit-detection semi-join (≤ ~8 MB of key data at
     * typical key widths — inside executor broadcast budgets). Larger
@@ -320,24 +327,13 @@ class VersionedStore(root: String) {
     * shape where adaptive replanning is pure scheduler overhead. */
   private val TinyMergeRows = 8000000L
 
-  /** Dev-only phase timer (`GRAFT_STORE_PROBE=1`): prints commit-path
-    * phase wall times. Zero-cost when off. */
-  private val probeEnabled = sys.env.contains("GRAFT_STORE_PROBE")
-  private def phase[A](label: String)(f: => A): A =
-    if (!probeEnabled) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[store] $label%-24s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   /** Write `df`'s rows as new immutable data files (names unique per
     * writer token — version-independent, so a rebased commit reuses them
     * unchanged); returns the new file names. The parquet job writes into
     * a staging directory, then the part files move (same filesystem,
     * atomic per file) into `files/` — a crashed stage leaves only orphans
-    * that the next vacuum sweeps, never a corrupt snapshot. */
+    * that vacuum sweeps past its retention horizon, never a corrupt
+    * snapshot. */
   private def stage(df: DataFrame, name: String): Seq[String] = {
     val tok = newToken()
     val stageDir = new java.io.File(tdir(name), s"_stage_$tok")
@@ -419,9 +415,9 @@ class VersionedStore(root: String) {
 
   /** Stage `df`'s rows and compute their per-file stats entries. */
   private def stageWithStats(df: DataFrame, name: String): Seq[FileEntry] = {
-    val staged = phase("  stage write")(stage(df, name))
+    val staged = stage(df, name)
     val schema = nullable(df.schema)
-    val stats = phase("  footer stats")(collectStats(df.sparkSession, name, schema, staged))
+    val stats = collectStats(df.sparkSession, name, schema, staged)
     staged.map(f => FileEntry(f, stats.getOrElse(f, Map.empty)))
   }
 
@@ -677,7 +673,7 @@ class VersionedStore(root: String) {
           case Some((w, b)) if txns(name, cur).getOrElse(w, -1L) >= b => return cur
           case _ =>
         }
-        val (tSchema, entries) = phase("manifest read")(manifestWithStats(name, cur))
+        val (tSchema, entries) = manifestWithStats(name, cur)
         // the source feeds TWO jobs (hit semi-join, merge write): pin it
         // ONCE. localCheckpoint, not persist — the pinned RDD makes every
         // downstream plan a trivial scan (r08: persist kept the full
@@ -714,7 +710,7 @@ class VersionedStore(root: String) {
             org.apache.spark.sql.functions.count(
               org.apache.spark.sql.functions.lit(1)).as("__nrows"))
         }
-        val source = phase("src checkpoint")(observed.localCheckpoint())
+        val source = observed.localCheckpoint()
         val metrics = obs.get
         val srcRows = metrics("__nrows").asInstanceOf[Long]
         val srcRange: Option[(String, String)] = keyField.flatMap { _ =>
@@ -769,7 +765,7 @@ class VersionedStore(root: String) {
               org.apache.spark.sql.functions.broadcast(srcKeys)
             else srcKeys
           import spark.implicits._
-          val hitNames: Set[String] = phase("hit detect")(
+          val hitNames: Set[String] =
             if (candidates.isEmpty) Set.empty
             else readEntries(spark, name, tSchema, candidates, withMeta = true)
               .select(keys.map(col) :+ col("__file"): _*)
@@ -783,7 +779,7 @@ class VersionedStore(root: String) {
               // the same driver footprint as a Delta log replay), and the
               // job has no shuffle stage at all on the broadcast path
               .mapPartitions(it => it.toSet.iterator)
-              .collect().toSet)
+              .collect().toSet
           val hit = candidates.filter(e => hitNames.contains(e.file))
           val hitSet = hit.map(_.file).toSet
           val rewriteTarget =
@@ -825,19 +821,19 @@ class VersionedStore(root: String) {
           // capture/restore and leave the session stuck on the override
           // (seen once in the parallel-writers spec).
           val staged = tinyMergeParts match {
-            case None => phase("merge stage")(stageWithStats(merged, name))
+            case None => stageWithStats(merged, name)
             case Some(parts) =>
               ConfScope.withConf(spark, Seq(
                 "spark.sql.adaptive.enabled" -> "false",
                 "spark.sql.shuffle.partitions" -> parts.toString)) {
-                phase("merge stage")(stageWithStats(merged, name))
+                stageWithStats(merged, name)
               }
           }
           // CHECK constraints vet the staged merge output (carried rows
           // were vetted when they entered or by addCheck's declaration
           // scan, so only churn-sized files pay the pass); a violation
           // deletes the staged files and refuses — table untouched.
-          phase("validate")(validateStaged(spark, name, outSchema, staged.map(_.file)))
+          validateStaged(spark, name, outSchema, staged.map(_.file))
           beforeCommitHook()
           // optimistic commit loop: each rebase re-targets the SAME staged
           // files onto the new head — zero recompute — after proving the
@@ -1641,15 +1637,23 @@ class VersionedStore(root: String) {
   }
 
   /** Retention: drop all but the latest `keep` manifests (Delta VACUUM
-    * for history), then garbage-collect every data file no retained
-    * manifest references — file sharing means deletion must be
+    * for history), then garbage-collect the data files they named that no
+    * retained manifest references — file sharing means deletion must be
     * reference-counted, exactly like Delta's vacuum walking the log. The
-    * live version is always retained. Also sweeps `_stage_*` leftovers
-    * of crashed writers. */
+    * live version is always retained. Files no manifest ever named,
+    * `_stage_*` dirs and temp manifests are swept only once older than
+    * `OrphanRetentionMs`. */
   def vacuumVersions(name: String, keep: Int): Seq[Long] = {
     require(keep >= 1, "must keep at least the live version")
     val live = currentVersion(name).toSeq
     val drop = history(name).dropRight(keep).filterNot(live.contains)
+    // deletion-vector files are referenced like data files: a dv lives
+    // while any retained manifest's entry names it
+    def refs(v: Long): Seq[String] = {
+      val es = manifestWithStats(name, v)._2
+      es.map(_.file) ++ es.flatMap(_.dvs)
+    }
+    val retired = drop.flatMap(refs).toSet
     drop.foreach { v =>
       manifestFile(name, v).delete()
       // a vacuumed version can never be read again (the exists() probe
@@ -1658,22 +1662,20 @@ class VersionedStore(root: String) {
       // version's full schema + file-stats seq forever)
       mfCache.remove((name, v))
     }
-    // deletion-vector files are referenced like data files: a dv lives
-    // while any retained manifest's entry names it
-    val referenced = history(name).flatMap { v =>
-      val es = manifestWithStats(name, v)._2
-      es.map(_.file) ++ es.flatMap(_.dvs)
-    }.toSet
+    val referenced = history(name).flatMap(refs).toSet
+    val cutoff = System.currentTimeMillis() - OrphanRetentionMs
+    def stale(f: java.io.File) = f.lastModified < cutoff
     val fd = filesDir(name)
     if (fd.exists)
-      fd.listFiles.filter(f => !referenced.contains(f.getName)).foreach(_.delete())
-    tdir(name).listFiles.filter(f => f.isDirectory && f.getName.startsWith("_stage_"))
-      .foreach(Fs.deleteRec)
-    // temp manifests / pointer staging of crashed writers (committed ones
-    // delete their temp in the same call)
-    tdir(name).listFiles.filter(f => f.isFile && f.getName.endsWith(".tmp") &&
-      (f.getName.startsWith("_v") || f.getName.startsWith("_current-")))
-      .foreach(_.delete())
+      fd.listFiles.filter(f => !referenced.contains(f.getName) &&
+        (retired.contains(f.getName) || stale(f))).foreach(_.delete())
+    // stage dirs, temp manifests and pointer staging of crashed writers
+    // (committed writers delete their own in the same call)
+    tdir(name).listFiles.filter { f =>
+      val n = f.getName
+      stale(f) && (n.startsWith("_stage_") ||
+        n.endsWith(".tmp") && (n.startsWith("_v") || n.startsWith("_current-")))
+    }.foreach(Fs.deleteRec)
     // key-index snapshots of vacuumed versions can never serve again
     val kept = history(name).toSet
     tdir(name).listFiles.filter(f => f.isDirectory && f.getName.startsWith("_index_"))

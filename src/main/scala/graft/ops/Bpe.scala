@@ -254,7 +254,7 @@ object Bpe {
   /** Persist the learned merge table into a store (the train-once /
     * encode-many production shape, like Ivf.buildIndex): one tiny
     * parquet table, ordered by round. */
-  def saveMerges(store: graft.engine.ParquetStore, s: SparkSession,
+  def saveMerges(store: graft.engine.VersionedStore, s: SparkSession,
       merges: Seq[(Int, String, String, Long)]): Unit = {
     val rows = merges.map { case (r, x, y, c) => Row(r.toLong, x, y, c) }
     val schema = StructType(Seq(
@@ -262,13 +262,13 @@ object Bpe {
       StructField("left", StringType, nullable = false),
       StructField("right", StringType, nullable = false),
       StructField("pair_count", LongType, nullable = false)))
-    store.overwrite(
+    store.write(
       s.createDataFrame(java.util.Arrays.asList(rows: _*), schema), "bpe_merges")
   }
 
   /** Load a persisted merge table in round order — model-sized driver
     * state, the same contract as loading centroids or codebooks. */
-  def loadMerges(store: graft.engine.ParquetStore,
+  def loadMerges(store: graft.engine.VersionedStore,
       s: SparkSession): Seq[(Int, String, String, Long)] =
     store.read(s, "bpe_merges").orderBy("round").collect()
       .map(r => (r.getLong(0).toInt, r.getString(1), r.getString(2), r.getLong(3)))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.SparkEntry.Q
-import graft.engine.{ParquetStore, Tables}
+import graft.engine.{Tables, VersionedStore}
 
 /** Second-wave operators: schema drift (the reference README's open TODO),
   * extra window frames, cube rollups, and the sink/optimize round-trips
@@ -52,31 +52,33 @@ object Extras {
     * (a lossy write would diverge). */
   private val sinkRoundtrip: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "sink")
-    val store = new ParquetStore(root)
-    store.overwrite(Profiler.schemaInformation(s, dir), "SchemaInformation")
+    val store = new VersionedStore(root)
+    store.write(Profiler.schemaInformation(s, dir), "SchemaInformation")
     store.read(s, "SchemaInformation").orderBy("tableName", "columnName")
   }
 
   /** The reference's maintenance pass (ref: OPTIMIZE/ZORDER, dbc cmd16/17):
-    * write small files, compact to target, z-order cluster, and emit the
-    * metrics struct in the reference's result shape (SURVEY Appendix B.3).
-    * The file counts are deterministic from the fixture geometry —
-    * repartition(8) writes 8 files, a 1 GiB bin-pack target folds any
-    * test-scale table to ceil(total/1GiB) = 1 (repartition(1), one
-    * task, one file), and the Z-order rewrite is repartitionByRange over
+    * write small files, compact, z-order cluster, and emit the metrics
+    * struct in the reference's result shape (SURVEY Appendix B.3), with
+    * file counts read from the manifests around each optimize and the
+    * reference's strategy labels (a 1 GiB bin-pack target folds any
+    * test-scale table to one file). The counts are deterministic from
+    * the fixture geometry — repartition(8) writes 8 files, compaction
+    * writes 1, and the Z-order rewrite is range-partitioned over
     * targetFiles = 1 — so the full metrics row hash-checks against a
     * declared VALUES oracle (file SIZES stay out of the result: byte
     * counts are compression-env-dependent). */
   private val maintenanceOptimize: Q = (s, dir) => {
     import s.implicits._
     val root = graft.engine.Fs.freshScratch(s, "opt")
-    val store = new ParquetStore(root)
-    store.overwrite(Tables.load(s, dir, "part").repartition(8), "part")
-    val c = store.compact(s, "part", targetBytes = 1073741824L)
-    val z = store.cluster(s, "part", Seq("p_size", "p_partkey"), bits = 8)
+    val store = new VersionedStore(root)
+    val v0 = store.write(Tables.load(s, dir, "part").repartition(8), "part")
+    def files(v: Long): Long = store.manifestWithStats("part", v)._2.size.toLong
+    val v1 = store.optimize(s, "part", targetFiles = 1)
+    val v2 = store.optimize(s, "part", zorderBy = Seq("p_size", "p_partkey"), bits = 8)
     Seq(
-      ("compact", c.numFilesAdded, c.numFilesRemoved, c.strategyName),
-      ("zorder", z.numFilesAdded, z.numFilesRemoved, z.strategyName))
+      ("compact", files(v1), files(v0), "binPack(1073741824)"),
+      ("zorder", files(v2), files(v1), "zorder(p_size,p_partkey)"))
       .toDF("op", "numFilesAdded", "numFilesRemoved", "strategyName")
       .orderBy("op")
   }
@@ -89,10 +91,10 @@ object Extras {
     * metrics are engine-specific and stay rows-only). */
   private val maintenanceOptimizeContent: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "optc")
-    val store = new ParquetStore(root)
-    store.overwrite(Tables.load(s, dir, "part").repartition(8), "part")
-    store.compact(s, "part", targetBytes = 1073741824L)
-    store.cluster(s, "part", Seq("p_size", "p_partkey"), bits = 8)
+    val store = new VersionedStore(root)
+    store.write(Tables.load(s, dir, "part").repartition(8), "part")
+    store.optimize(s, "part", targetFiles = 1)
+    store.optimize(s, "part", zorderBy = Seq("p_size", "p_partkey"), bits = 8)
     store.read(s, "part")
       .select(col("p_partkey"), col("p_name"), col("p_size").cast("int").as("p_size"),
         col("p_retailprice").cast("double").as("p_retailprice"))

@@ -144,15 +144,15 @@ object Ivf {
     * file", partitioned by cell on disk so a probe reads only its
     * cells' files). Production shape: train/assign is a batch job;
     * queries touch the materialized index only. */
-  def buildIndex(store: graft.engine.ParquetStore, e: DataFrame,
+  def buildIndex(store: graft.engine.VersionedStore, e: DataFrame,
       k: Int, iters: Int): Unit = {
     val spark = e.sparkSession
     import spark.implicits._
     val cdf = train(e, k, iters).toSeq.toDF("cell", "centroid")
-    store.overwrite(cdf, "ivf_centroids")
+    store.write(cdf, "ivf_centroids")
     // repartition by cell: each file holds few cells, so each file's
     // cell min/max row-group stats make probe filters skip it entirely
-    store.overwrite(assign(e, cdf).repartition(col("cell")), "ivf_assigned")
+    store.write(assign(e, cdf).repartition(col("cell")), "ivf_assigned")
   }
 
   /** Query the PERSISTED index: nearest `nprobe` cells from the centroid
@@ -161,7 +161,7 @@ object Ivf {
     * PUSHES to the parquet scan: with cell-clustered files, row-group
     * stats skip every non-probed file, so I/O is the nprobe/k fraction
     * of the index (a broadcast join would scan everything). */
-  def queryIndex(spark: SparkSession, store: graft.engine.ParquetStore,
+  def queryIndex(spark: SparkSession, store: graft.engine.VersionedStore,
       queryVec: Array[Float], nprobe: Int, k: Int): DataFrame = {
     val qv = array(queryVec.map(lit(_)): _*).cast("array<float>")
     val probeCells = store.read(spark, "ivf_centroids")

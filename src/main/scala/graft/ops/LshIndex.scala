@@ -24,9 +24,9 @@ object LshIndex {
 
   /** Build the inverted file ONCE: one (table, bucket) row per vector
     * per hash table, bucket-clustered on disk. */
-  def buildIndex(store: graft.engine.ParquetStore, e: DataFrame,
+  def buildIndex(store: graft.engine.VersionedStore, e: DataFrame,
       planes: Int, tables: Int): Unit =
-    store.overwrite(
+    store.write(
       LlmPipeline.lshTables(e, planes, tables)
         .repartition(col("table"), col("bucket")),
       "lsh_buckets")
@@ -38,7 +38,7 @@ object LshIndex {
     * with exact cosine against the embedding table. Returns top-k
     * (vec_id, cos) excluding nothing — callers filter the query row out
     * if it is part of the corpus. */
-  def queryIndex(spark: SparkSession, store: graft.engine.ParquetStore,
+  def queryIndex(spark: SparkSession, store: graft.engine.VersionedStore,
       embeddings: DataFrame, queryVec: Array[Float],
       planes: Int, tables: Int, k: Int): DataFrame = {
     val qv = array(queryVec.map(lit(_)): _*).cast("array<float>")

@@ -56,7 +56,7 @@ class BpeSpec extends SparkSuite {
   test("persisted merge table round-trips and encodes identically to in-session") {
     val merges = Bpe.learnedMerges(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft-bpe-model")
-    val store = new graft.engine.ParquetStore(dir.toString)
+    val store = new graft.engine.VersionedStore(dir.toString)
     Bpe.saveMerges(store, spark, merges)
     assert(Bpe.loadMerges(store, spark) === merges, "model round-trip lossless")
     val vocab = graft.engine.Tables.load(spark, sf, "documents")

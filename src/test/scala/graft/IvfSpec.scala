@@ -93,7 +93,7 @@ class IvfSpec extends SparkSuite {
     val e = graft.engine.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val indexDir = java.nio.file.Files.createTempDirectory("graft-ivf-index")
-    val store = new graft.engine.ParquetStore(indexDir.toString)
+    val store = new graft.engine.VersionedStore(indexDir.toString)
     Ivf.buildIndex(store, e, k = 16, iters = 2)
     val qv = e.filter(col("vec_id") === 0).head()
       .getSeq[Float](1).toArray

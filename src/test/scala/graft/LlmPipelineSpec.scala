@@ -118,7 +118,7 @@ class LlmPipelineSpec extends SparkSuite {
     val e = graft.engine.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val indexDir = java.nio.file.Files.createTempDirectory("graft-lsh-index")
-    val store = new graft.engine.ParquetStore(indexDir.toString)
+    val store = new graft.engine.VersionedStore(indexDir.toString)
     LshIndex.buildIndex(store, e, planes = 4, tables = 8)
     val qv = e.filter(col("vec_id") === 0).head().getSeq[Float](1).toArray
     // the query vector is in the corpus: ask for one extra, drop the

@@ -4,22 +4,22 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{ParquetStore, Tables}
-import graft.functions.ZOrder
+import graft.engine.{Tables, VersionedStore}
+import graft.functions.{Native, ZOrder}
 import graft.ops.Joins
 
-/** TableStore semantics: upsert (MERGE parity), compaction, Z-order
-  * clustering (SURVEY.md §2.3 merge_upsert, §4.1). */
+/** Table-store semantics: upsert (MERGE parity), compaction, Z-order
+  * clustering (SURVEY.md §2.3 merge_upsert, §4.1), plus the
+  * store-independent MERGE operator and z-value kernels. Versioning,
+  * concurrency and retention are covered by VersionedStoreSpec. */
 class StoreSpec extends SparkSuite {
 
-  private def tmpStore(): (ParquetStore, String) = {
-    val dir = Files.createTempDirectory("graft-store").toString
-    (new ParquetStore(dir), dir)
-  }
+  private def tmpStore(): VersionedStore =
+    new VersionedStore(Files.createTempDirectory("graft-store").toString)
 
   test("upsert: source wins on match, inserts new, keeps unmatched target") {
     import spark.implicits._
-    val (store, _) = tmpStore()
+    val store = tmpStore()
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
     store.upsert(spark, "t", base, Seq("k"))
     val src = Seq((2L, "B"), (4L, "D")).toDF("k", "v")
@@ -30,7 +30,7 @@ class StoreSpec extends SparkSuite {
 
   test("upsert: NULL keys never match (MERGE ON t.k = s.k semantics)") {
     import spark.implicits._
-    val (store, _) = tmpStore()
+    val store = tmpStore()
     val base = Seq((Option.empty[Long], "old-null"), (Some(1L), "a")).toDF("k", "v")
     store.upsert(spark, "t", base, Seq("k"))
     val src = Seq((Option.empty[Long], "new-null")).toDF("k", "v")
@@ -43,7 +43,7 @@ class StoreSpec extends SparkSuite {
 
   test("upsert is idempotent (MERGE re-run yields identical table)") {
     import spark.implicits._
-    val (store, _) = tmpStore()
+    val store = tmpStore()
     val src = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     store.upsert(spark, "t", src, Seq("k"))
     val first = store.read(spark, "t").collect().toSet
@@ -61,23 +61,44 @@ class StoreSpec extends SparkSuite {
   }
 
   test("compact bin-packs many small files into the target count") {
-    val (store, _) = tmpStore()
+    val store = tmpStore()
     val df = Tables.load(spark, sf, "lineitem").repartition(16)
-    store.overwrite(df, "li")
-    val metrics = store.compact(spark, "li", targetBytes = 64L * 1024 * 1024)
-    assert(metrics.numFilesRemoved === 16)
-    assert(metrics.numFilesAdded === 1)
+    val v0 = store.write(df, "li")
+    val v1 = store.optimize(spark, "li", targetFiles = 1)
+    def files(v: Long): Int = store.manifestWithStats("li", v)._2.size
+    assert(files(v0) === 16)
+    assert(files(v1) === 1)
     assert(store.read(spark, "li").count() === df.count())
   }
 
   test("cluster preserves content and orders files along the z-curve") {
-    val (store, _) = tmpStore()
+    val store = tmpStore()
     val df = Tables.load(spark, sf, "part")
-    store.overwrite(df.repartition(4), "p")
+    val v0 = store.write(df.repartition(4), "p")
     val before = store.read(spark, "p").collect().toSet
-    val m = store.cluster(spark, "p", Seq("p_size", "p_partkey"), bits = 8)
-    assert(m.strategyName.startsWith("zorder"))
+    val v1 = store.optimize(spark, "p", targetFiles = 4,
+      zorderBy = Seq("p_size", "p_partkey"), bits = 8)
+    assert(v1 === v0 + 1L)
     assert(store.read(spark, "p").collect().toSet === before)
+    // the rewrite is range-partitioned on the z-value: each file is one
+    // contiguous z-curve segment, so the files' z ranges never overlap.
+    // z is recomputed as the clustering computes it: each column
+    // min-max-normalized to 8 bits, then bit-interleaved
+    val mm = df.agg(min("p_size").cast("double"), max("p_size").cast("double"),
+      min("p_partkey").cast("double"), max("p_partkey").cast("double")).head()
+    def norm(c: String, i: Int) = {
+      val (mn, mx) = (mm.getDouble(2 * i), mm.getDouble(2 * i + 1))
+      ((col(c).cast("double") - mn) / (if (mx > mn) mx - mn else 1.0) * 255).cast("bigint")
+    }
+    val zs = Native.zvalue(8, norm("p_size", 0), norm("p_partkey", 1))
+    val (_, entries) = store.manifestWithStats("p", v1)
+    assert(entries.size > 1)
+    val segs = store.read(spark, "p")
+      .withColumn("f", input_file_name()).withColumn("z", zs)
+      .groupBy("f").agg(min("z"), max("z")).collect()
+      .map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
+    assert(segs.length === entries.size)
+    segs.sliding(2).foreach { case Array(a, b) => assert(a._2 <= b._1, s"$a overlaps $b") }
   }
 
   test("zvalue interleaves bits (Morton order)") {
@@ -99,22 +120,5 @@ class StoreSpec extends SparkSuite {
     val df = Tables.load(spark, sf, "part")
       .select(col("p_partkey"), ZOrder.zvalue(8, col("p_size"), col("p_partkey") % 256).as("z"))
     assert(df.select(countDistinct(col("z"))).head().getLong(0) > 1)
-  }
-
-  test("vacuum reclaims abandoned staged dirs but respects retention") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vacuum").toString
-    val store = new graft.engine.ParquetStore(root)
-    import spark.implicits._
-    store.overwrite(Seq((1L, "a")).toDF("k", "v"), "t")
-    // simulate a crash-abandoned staged write
-    val staged = new java.io.File(root + "/t__staged")
-    staged.mkdirs()
-    new java.io.File(staged, "part-0.parquet").createNewFile()
-    assert(store.vacuum(retainMs = 3600000L) === 0L)   // too young: retained
-    assert(staged.exists)
-    assert(store.vacuum(retainMs = 0L) === 1L)          // past horizon: gone
-    assert(!staged.exists)
-    // the live table is untouched
-    assert(store.read(spark, "t").count() === 1L)
   }
 }

@@ -35,6 +35,19 @@ class VersionedStoreSpec extends SparkSuite {
     val was = store.readVersion(spark, "t", 1L).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(was === Set((1L, "a"), (2L, "b")))
+    // re-running the same MERGE yields the identical table
+    store.upsert(spark, "t", Seq((2L, "B"), (3L, "c")).toDF("k", "v"), Seq("k"))
+    assert(store.read(spark, "t").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet === now)
+    // NULL keys never match (MERGE ON t.k = s.k): a NULL source key
+    // inserts a second NULL-key row instead of updating the first
+    val nulls = freshStore()
+    nulls.upsert(spark, "t",
+      Seq((Option.empty[Long], "old-null"), (Some(1L), "a")).toDF("k", "v"), Seq("k"))
+    nulls.upsert(spark, "t", Seq((Option.empty[Long], "new-null")).toDF("k", "v"), Seq("k"))
+    val got = nulls.read(spark, "t").collect()
+      .map(r => (if (r.isNullAt(0)) null else r.getLong(0), r.getString(1))).toSet
+    assert(got === Set((null, "old-null"), (null, "new-null"), (1L, "a")))
   }
 
   test("vacuumVersions enforces retention but never drops the live version") {
@@ -176,7 +189,8 @@ class VersionedStoreSpec extends SparkSuite {
     val prunedB = store.pruneCandidates(spark, "t", probeB, "b").size
     assert(prunedA <= 4, s"z-ordered a-ranges must prune most files, scanned $prunedA/8")
     assert(prunedB <= 4, s"z-ordered b-ranges must prune most files, scanned $prunedB/8")
-    assert(store.read(spark, "t").count() === 1024L, "clustering preserves rows")
+    assert(store.read(spark, "t").collect().toSet === data.collect().toSet,
+      "clustering preserves rows")
   }
 
   test("vacuum garbage-collects only unreferenced data files") {
@@ -192,6 +206,29 @@ class VersionedStoreSpec extends SparkSuite {
     assert(store.read(spark, "t").count() === 100L)
     val onDisk = new java.io.File(s"$root/t/files").listFiles.map(_.getName).toSet
     assert(onDisk === liveFiles.toSet, "exactly the referenced files remain")
+  }
+
+  test("vacuum spares uncommitted files and stage dirs until the retention horizon") {
+    val root = java.nio.file.Files.createTempDirectory("graft-versions").toString
+    val store = new VersionedStore(root)
+    store.write(Seq((1L, "a")).toDF("k", "v"), "t")
+    store.write(Seq((2L, "b")).toDF("k", "v"), "t")
+    val (_, retired) = store.manifest("t", 1L)
+    // a writer in flight: its parts already moved into files/, its stage
+    // dir not yet removed, its manifest not yet linked
+    val part = new java.io.File(s"$root/t/files/d-0123456789ab-p00000.parquet")
+    val stageDir = new java.io.File(s"$root/t/_stage_x")
+    stageDir.mkdirs()
+    assert(part.createNewFile())
+    store.vacuumVersions("t", keep = 1)
+    assert(part.exists && stageDir.exists, "vacuum deleted an in-flight writer's files")
+    // the dropped version's own files still go at once
+    assert(retired.forall(f => !new java.io.File(s"$root/t/files/$f").exists))
+    val old = System.currentTimeMillis() - 8L * 24 * 60 * 60 * 1000
+    assert(part.setLastModified(old) && stageDir.setLastModified(old))
+    store.vacuumVersions("t", keep = 1)
+    assert(!part.exists && !stageDir.exists, "orphans past the horizon must be swept")
+    assert(store.read(spark, "t").collect().map(_.getLong(0)).toSeq === Seq(2L))
   }
 
   test("delete rewrites only files containing matches; others carry over") {

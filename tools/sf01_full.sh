@@ -6,13 +6,19 @@
 # r10 ADVICE: a crashed Verify/check run must not masquerade as a clean
 # (empty) summary — both exit codes are recorded in the JSON, pass == 0
 # counts as crashed, and the script exits non-zero on any failure.
+#
+# Usage: SPARK_GRAFT_SF_DIR=<sf0.1 testdata dir> tools/sf01_full.sh [outDir] [log]
+# Runs from the checkout root with an offline sbt (no network needed).
 set -u
-OUT=${1:-/tmp/vout_sf01}
-LOG=${2:-/tmp/check_sf01.log}
+SF=$(realpath -m "${SPARK_GRAFT_SF_DIR:?set SPARK_GRAFT_SF_DIR to the sf0.1 testdata dir}")
+OUT=$(realpath -m "${1:-/tmp/vout_sf01}")
+LOG=$(realpath -m "${2:-/tmp/check_sf01.log}")
+cd "$(dirname "$0")/.."
 rm -rf "$OUT"
-/tmp/run_graft.sh graft.Verify /root/testdata/sf0.1 "$OUT" > /tmp/verify_sf01.log 2>&1
+COURSIER_MODE=offline sbt --batch -Dsbt.offline=true "runMain graft.Verify $SF $OUT" \
+  > "$LOG.verify" 2>&1
 VERIFY_EXIT=$?
-python3 tools/check.py /root/testdata/sf0.1 "$OUT" > "$LOG" 2>&1
+python3 tools/check.py "$SF" "$OUT" > "$LOG" 2>&1
 CHECK_EXIT=$?
 echo "VERIFY_EXIT=$VERIFY_EXIT CHECK_EXIT=$CHECK_EXIT" >> "$LOG"
 VERIFY_EXIT=$VERIFY_EXIT CHECK_EXIT=$CHECK_EXIT python3 - "$LOG" <<'EOF'
